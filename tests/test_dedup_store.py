@@ -145,7 +145,6 @@ def test_near_copy_flags_against_store(spark, tmp_path):
     assert rows[100].est_jaccard == 1.0 and rows[100].is_dup
 
 
-@pytest.mark.slow
 def test_dedup_probe_stream_equals_batch(spark, tmp_path):
     """Arriving documents replayed across micro-batches must union to
     exactly the one-batch probe image (probe independence), each batch
@@ -326,7 +325,6 @@ def test_ingest_wave_loop(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_dedup_ingest_stream_loop(spark, tmp_path):
     """Continuous admission: batch 2's duplicate of a batch-1 ADMITTED
     doc must be flagged (the store advanced between batches), batch 1's
@@ -453,7 +451,6 @@ def test_dedup_store_stats_parity_and_saturation(spark, tmp_path):
     assert row.saturated_buckets == N_BANDS and row.max_bucket == BUCKET_CAP
 
 
-@pytest.mark.slow
 def test_replayed_append_detect_and_repair(spark, tmp_path):
     """The watermark crash window as CODE (r13 VERDICT next-round #3).
     Forced crash: a wave's append lands but the stream dies BEFORE the
@@ -503,7 +500,6 @@ def test_replayed_append_detect_and_repair(spark, tmp_path):
     assert repaired == clean and len(repaired) > 0
 
 
-@pytest.mark.slow
 def test_compact_preserves_content_and_cuts_files(spark, tmp_path):
     """Three appended waves leave small files behind; compaction must
     cut the file counts while leaving probe results byte-identical."""
@@ -633,7 +629,6 @@ def test_ingest_stream_replay_guard(spark, tmp_path):
     assert row.n_unsigned_band_docs == 0
 
 
-@pytest.mark.slow
 def test_ingest_loop_with_midstream_compaction(spark, tmp_path):
     """wave → compact → wave: the loop's semantics must be identical
     with a compaction between two waves (r12 VERDICT next-round #7) —

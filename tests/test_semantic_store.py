@@ -327,7 +327,6 @@ def test_ingest_stream_loop_and_replay_guard(spark, tmp_path):
     assert row.n_unvectored_band_ids == 0
 
 
-@pytest.mark.slow
 def test_stats_parity_saturation_and_crash_detection(spark, tmp_path):
     """DuckDB parity over the written partitioned parquet; the
     saturation detector fires on a capped flood; the append crash
@@ -410,7 +409,6 @@ def test_stats_parity_saturation_and_crash_detection(spark, tmp_path):
     ), "band replay stacked duplicate rows"
 
 
-@pytest.mark.slow
 def test_replayed_append_detect_and_repair(spark, tmp_path):
     """The watermark crash window as CODE (r13 VERDICT next-round #3),
     semantic side: a wave's append lands, the watermark write is
@@ -451,7 +449,6 @@ def test_replayed_append_detect_and_repair(spark, tmp_path):
     assert repaired == clean and len(repaired) > 0
 
 
-@pytest.mark.slow
 def test_compact_midstream_and_crash_repair(spark, tmp_path):
     """wave → compact → wave must behave identically to the
     uncompacted twin (reports and stats equal, files cut to one per
@@ -521,7 +518,6 @@ def test_compact_midstream_and_crash_repair(spark, tmp_path):
         )
 
 
-@pytest.mark.slow
 def test_probe_stream_equals_batch(spark, tmp_path):
     """Arriving vectors replayed across micro-batches must union to
     exactly the one-batch probe image (probe independence)."""

@@ -1,10 +1,10 @@
-"""Shared durability machinery for the persisted-store family
-(``dedup_store``'s MinHash band store, ``semantic_store``'s SRP band
-store): the fail-loud filesystem gate, the atomic ingest watermark,
-the crash-safe compaction swap/repair protocol, and the
-replayed-append repair rewrite. Extracted from
-``dedup_store`` (r12/r13) when the semantic store arrived — ONE
-implementation of the swap state machine, table names parameterized.
+"""Shared durability machinery for the persisted-store family (the
+``band_store`` protocol behind the dedup and semantic stores, and the
+bm25, phrase, ivf and gram stores): the fail-loud filesystem gate,
+the atomic ingest watermark, the staged bucket-fan record, the
+crash-safe compaction swap/repair protocol, and the replayed-append
+repair rewrite — ONE implementation of the swap state machine, table
+names parameterized.
 
 DURABILITY MODEL (single-maintainer, local/HDFS-rename filesystems):
 maintenance that swaps directories and the ingest watermark rely on
@@ -96,8 +96,10 @@ def derived_fan(
     "make partitioning scale-adaptive — derive from input size"). The
     fan is computed ONCE at store creation from the corpus row count,
     persisted beside the store (``_n_buckets``), and every later verb
-    (probe/append/delete/compact) reads it back — a store's layout is
-    fixed at birth; growth is a compaction-time migration."""
+    (probe/append/delete/compact) reads it back. A store keeps its
+    birth fan for life: compaction rewrites files under the same fan
+    and does NOT re-derive it, so a store that has grown far past its
+    birth size only gets a larger fan from a rebuild (``write_*``)."""
     q = max(1, (max(0, n_rows) + rows_per_bucket - 1) // rows_per_bucket)
     fan = 1 << (q - 1).bit_length()
     return max(lo, min(hi, fan))
@@ -106,16 +108,34 @@ def derived_fan(
 def read_store_fan(path: str, default: int) -> int:
     """The store's persisted bucket fan (``_n_buckets``), or ``default``
     for a store written before fans were derived (the legacy module
-    constant keeps those stores readable). One os read, no jobs."""
+    constant keeps those stores readable). One os read, no jobs.
+    Raises while a staged record (``_n_buckets.staged``) is present:
+    a store write died between staging its layout and committing it,
+    so the bands on disk may not match any recorded modulus."""
+    if os.path.exists(f"{strip_file_scheme(path)}/_n_buckets.staged"):
+        raise RuntimeError(
+            f"store at {path!r} has an uncommitted bucket-fan record "
+            "(_n_buckets.staged): its last write crashed before the "
+            "bands committed — re-run the store write"
+        )
     txt = read_small_text(path, "_n_buckets")
     return default if txt is None else int(txt.strip())
 
 
-def write_store_fan(path: str, n_buckets: int) -> None:
-    """Persist the store's bucket fan (atomic small-text write). Lands
-    BEFORE the first partitioned table is written so any store with
-    bucketed data always carries its layout record."""
-    write_small_text(path, "_n_buckets", str(int(n_buckets)))
+def stage_store_fan(path: str) -> None:
+    """Mark a store write in flight: ``_n_buckets.staged`` exists from
+    before the row table is overwritten until ``commit_store_fan``, and
+    every fan read fails loudly meanwhile."""
+    os.makedirs(strip_file_scheme(path), exist_ok=True)
+    write_small_text(path, "_n_buckets.staged", "")
+
+
+def commit_store_fan(path: str, n_buckets: int) -> None:
+    """Record the fan in the staged file and commit it by rename, once
+    the bucketed table it describes has committed."""
+    write_small_text(path, "_n_buckets.staged", str(int(n_buckets)))
+    base = strip_file_scheme(path)
+    os.replace(f"{base}/_n_buckets.staged", f"{base}/_n_buckets")
 
 
 def repair_store(path: str, tables: tuple[str, ...]) -> None:
