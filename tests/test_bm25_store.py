@@ -245,7 +245,6 @@ def test_stats_lag_detect_and_repair(spark, tmp_path):
     assert row.n_docs == row.n_doclen_rows
 
 
-@pytest.mark.slow
 def test_probe_stream_equals_batch(spark, tmp_path):
     """Arriving QUERIES probed per micro-batch must union to the
     one-call image — queries are independent rows."""

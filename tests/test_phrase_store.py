@@ -274,7 +274,6 @@ def test_replayed_append_detect_and_repair(spark, tmp_path):
     assert repaired == clean and len(repaired) > 0
 
 
-@pytest.mark.slow
 def test_probe_stream_equals_batch(spark, tmp_path):
     """Arriving PROBES scored per micro-batch must union to the
     one-call image — probes are independent rows."""

@@ -590,3 +590,102 @@ def test_ivf_compact_preserves_probe_and_cuts_files(
     hits = I.probe_index(spark, sf_full, live).collect()
     assert hits and not {r.neighbor_id for r in hits} & set(victims + more_victims)
     assert I.resume_pending_delete(spark, live) is False
+
+
+# ------------------------------------ ivf takedown intent protocol ---
+
+
+def test_ivf_append_refuses_pending_takedown(spark, tmp_path, monkeypatch):
+    """A takedown crashed after its staging committed: an append into a
+    live list directory would be replaced by the stale staging at the
+    swap, so append_index must fail loud until resume_pending_delete
+    finishes the takedown — then the same wave lands and the index
+    equals a rebuild without the victims."""
+    from trisk_spark.catalog import table as _table
+
+    victims = [100, 103, 107]
+    wave_ids = list(range(110, 120))
+    sf_full = _ivf_synth_sf(tmp_path, "full")
+    sf_base = _ivf_synth_sf(tmp_path, "base", drop_ids=wave_ids)
+    sf_kept = _ivf_synth_sf(tmp_path, "kept", drop_ids=victims)
+    live, ref = str(tmp_path / "live"), str(tmp_path / "ref")
+    I.write_index(spark, sf_base, live)
+    I.write_index(spark, sf_kept, ref)
+    wave = _table(spark, sf_full, "embeddings").where(F.col("vec_id").isin(wave_ids))
+
+    real_complete = storefs.complete_staged_partition_swap
+
+    def flaky(path, table_, part_col):
+        if os.path.isdir(f"{storefs.strip_file_scheme(path)}/{table_}_staged_delete"):
+            raise RuntimeError("injected post-stage")
+        return real_complete(path, table_, part_col)
+
+    monkeypatch.setattr(storefs, "complete_staged_partition_swap", flaky)
+    with pytest.raises(RuntimeError, match="injected"):
+        I.delete_from_index(spark, victims, live)
+    monkeypatch.setattr(storefs, "complete_staged_partition_swap", real_complete)
+    assert os.path.isdir(f"{live}/index_staged_delete")
+
+    with pytest.raises(RuntimeError, match="_delete_intent"):
+        I.append_index(spark, wave, live)
+    assert I.resume_pending_delete(spark, live)
+    I.append_index(spark, wave, live)
+    icols = ["vec_id", "qvec", "qnorm", "codes", "recon_norm", "list_id"]
+    assert _snap(spark, live, "index", icols) == _snap(spark, ref, "index", icols)
+
+
+def _partial_swap(path, tables):
+    """A compaction swap that dies between its two renames: the live
+    table is renamed to ``_old`` and its tmp never lands."""
+    base = storefs.strip_file_scheme(path)
+    t = tables[0]
+    os.rename(f"{base}/{t}", f"{base}/{t}_old")
+    raise RuntimeError("injected partial swap")
+
+
+def test_ivf_delete_repairs_a_crashed_compaction_first(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that died inside its swap leaves no live ``index``
+    directory; the next takedown must repair the store before it lands
+    its intent and reads the index."""
+    victims = [100, 103, 107]
+    live, ref = str(tmp_path / "live"), str(tmp_path / "ref")
+    I.write_index(spark, _ivf_synth_sf(tmp_path, "full"), live)
+    I.write_index(spark, _ivf_synth_sf(tmp_path, "kept", drop_ids=victims), ref)
+
+    with monkeypatch.context() as m:
+        m.setattr(storefs, "swap_in_compacted", _partial_swap)
+        with pytest.raises(RuntimeError, match="injected"):
+            I.compact_ivf_index(spark, live)
+    assert not os.path.isdir(f"{live}/index")  # the damaged state
+
+    I.delete_from_index(spark, victims, live)
+    icols = ["vec_id", "qvec", "qnorm", "codes", "recon_norm", "list_id"]
+    assert _snap(spark, live, "index", icols) == _snap(spark, ref, "index", icols)
+    assert glob.glob(f"{live}/_delete_intent*") == []
+    assert glob.glob(f"{live}/index_*") == []
+
+
+def test_ivf_standalone_resume_repairs_first(spark, tmp_path, monkeypatch):
+    """A pending takedown over a store whose live index was renamed
+    away by a crashed swap: a standalone resume_pending_delete repairs
+    (rolls ``index_old`` back) before it re-runs the recorded delete."""
+    victims = [100, 103, 107]
+    live, ref = str(tmp_path / "live"), str(tmp_path / "ref")
+    I.write_index(spark, _ivf_synth_sf(tmp_path, "full"), live)
+    I.write_index(spark, _ivf_synth_sf(tmp_path, "kept", drop_ids=victims), ref)
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            I, "_run_recorded_delete",
+            lambda *a: (_ for _ in ()).throw(RuntimeError("injected")),
+        )
+        with pytest.raises(RuntimeError, match="injected"):
+            I.delete_from_index(spark, victims, live)
+    os.rename(f"{live}/index", f"{live}/index_old")
+
+    assert I.resume_pending_delete(spark, live)
+    icols = ["vec_id", "qvec", "qnorm", "codes", "recon_norm", "list_id"]
+    assert _snap(spark, live, "index", icols) == _snap(spark, ref, "index", icols)
+    assert glob.glob(f"{live}/_delete_intent*") == []

@@ -93,8 +93,8 @@ def _require_no_pending_takedown(
 ) -> None:
     """ADMISSION-SIDE TAKEDOWN GUARD (queued in r16, built r17):
     refuse to admit while any target store carries a crashed
-    takedown's durable ``_delete_intent``. Re-admitting mid-crash is
-    the one ordering the takedown machinery cannot survive: the
+    takedown's durable intent. Re-admitting mid-crash is the one
+    ordering the takedown machinery cannot survive: the
     re-driven delete removes whatever its recorded intent ids name —
     including rows this wave just re-admitted — and for the
     partitioned postings stores an append into a bucket whose staged
@@ -109,22 +109,17 @@ def _require_no_pending_takedown(
     one os.path.exists per store, no jobs.
 
     TWO marker classes are checked per store: the per-store
-    ``_delete_intent`` (a crash INSIDE that store's delete) and the
+    takedown intent (a crash INSIDE that store's delete) and the
     wave-level ``_takedown_wave_ids`` CSV (r17 review: the per-store
     intents are consumed as each store completes, so a composed
     ``takedown_wave`` crashed BETWEEN stores leaves no intent
     anywhere — the wave marker, written before any store mutates and
     removed after the last, is what survives that window)."""
-    import os
-
     for path, label in stores:
-        victims = None
         repair = None
-        ipath = f"{storefs.strip_file_scheme(path)}/_delete_intent"
-        if os.path.exists(ipath):
-            victims = [
-                int(r[0]) for r in spark.read.parquet(ipath).collect()
-            ]  # id-sized (the takedown driver-literal class)
+        # id-sized (the takedown driver-literal class)
+        victims = storefs.pending_takedown_ids(spark, path)
+        if victims is not None:
             repair = (
                 " — finish the takedown first (resume_pending_delete "
                 "on the store, or re-drive takedown_wave with its id "
@@ -205,7 +200,7 @@ def admission_wave(
 
     ADMISSION-SIDE TAKEDOWN GUARD (the r16-queued r17 hardening): a
     wave refuses to run while any target store carries a crashed
-    takedown's durable ``_delete_intent`` — re-admitting mid-crash is
+    takedown's durable intent — re-admitting mid-crash is
     the one ordering the takedown protocol cannot survive (see
     ``_require_no_pending_takedown``)."""
     stores = [(dedup_path, "dedup"), (sem_path, "semantic")]
@@ -766,7 +761,7 @@ _GRAM_ACK = "_pre_sequence_ack"
 #: wave's first mandatory store): the victim id CSV, written before
 #: any store of a ``takedown_wave`` mutates and removed only after
 #: the LAST store completes. Exists so a wave crashed BETWEEN stores
-#: — where every per-store ``_delete_intent`` is already consumed —
+#: — where every per-store takedown intent is already consumed —
 #: still leaves a durable record the admission-side guard can see
 #: (r17 review: without it, mid-crash re-admission was admitted
 #: cleanly and then silently erased by the re-drive).
@@ -942,7 +937,7 @@ def takedown_wave(
     (``delete_from_dedup_store`` / ``delete_from_semantic_store`` /
     ``delete_from_bm25_store`` / ``delete_from_phrase_store`` /
     ``delete_from_gram_store``), each
-    individually crash-safe behind its own durable ``_delete_intent``
+    individually crash-safe behind its own durable takedown intent
     and per-store ``resume_pending_delete``; a crash between stores
     leaves earlier stores clean and later ones untouched — re-running
     the same takedown converges (each row-store delete is a replay
@@ -1157,7 +1152,7 @@ def takedown_wave(
         # per-(term, doc) facts, so its delete is naturally
         # idempotent under whole-wave re-drives and re-takedown after
         # re-admission — it needs no sequence machinery, only its own
-        # durable _delete_intent (resume handled inside the verb)
+        # durable takedown intent (resume handled inside the verb)
         delete_from_phrase_store(spark, ids, phrase_path)
     if gram_path is not None:
         _complete_gram_takedown(gram_path, seq, ids)

@@ -50,40 +50,35 @@ replay-from-a-durable-log model of *State Management in Apache Flink*
   * compact / replay repair: tmp build then the recovery-ordered swap
     (``storefs.swap_in_compacted``); ``storefs.repair_store`` finishes
     or rolls back any half-swapped table.
-  * delete: a durable ``_delete_intent`` lands first; touched band
-    directories are cleared and re-derived from the kept rows (so cap
-    re-entrants come back and loner buckets end empty), the row table
-    swaps last, then the intent drops. Every intermediate state
-    re-runs to completion from the intent (``resume_pending_delete``).
+  * delete: a durable takedown intent lands first
+    (``storefs.record_takedown``); touched band directories are
+    cleared and re-derived from the kept rows (so cap re-entrants come
+    back and loner buckets end empty), the row table swaps last, then
+    the intent drops. Every intermediate state re-runs to completion
+    from the intent (``resume_pending_delete``).
 """
 
 from __future__ import annotations
 
-import os
 import shutil
 from dataclasses import dataclass
-from functools import reduce
+from functools import partial, reduce
 from operator import or_
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
+from trisk_spark.catalog import ckpt_eager
 from trisk_spark.functions import storefs
 
 #: ceiling on a single probe wave: its band rows are BROADCAST into the
 #: candidate join; the check rides the routing collect (no extra job)
 MAX_PROBE_ROWS = 100_000
 
-#: ceiling on a single takedown batch: the id set is a driver-held
-#: literal and the routing collect is <= ids x n_bands pairs
-MAX_DELETE_IDS = 100_000
+MAX_DELETE_IDS = storefs.MAX_DELETE_IDS
 
-#: deterministic corpus split of the self-contained registered rows:
-#: id % ARRIVING_MOD == 0 arrives, the rest is the existing corpus;
-#: existing ids with id % VICTIM_MOD == 1 are the takedown victims
-ARRIVING_MOD = 5
-VICTIM_MOD = 17
+ARRIVING_MOD = storefs.ARRIVING_MOD
+VICTIM_MOD = storefs.VICTIM_MOD
 
 
 @dataclass(frozen=True)
@@ -316,20 +311,6 @@ def ingest_wave(
     return report
 
 
-def _foreach_batch(stream: DataFrame, body):
-    """foreachBatch with the micro-batch persisted for the call (the
-    routing collect and the score join both consume it)."""
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            body(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
 def ingest_stream(
     spec: BandSpec, spark: SparkSession, stream: DataFrame, path: str, sink
 ):
@@ -346,13 +327,13 @@ def ingest_stream(
         storefs.write_ingest_watermark(path, batch_id)
         sink(report, batch_id)
 
-    return _foreach_batch(stream, body)
+    return storefs.foreach_batch(stream, body)
 
 
 def probe_stream(
     spec: BandSpec, spark: SparkSession, stream: DataFrame, path: str, sink
 ):
-    return _foreach_batch(
+    return storefs.foreach_batch(
         stream,
         lambda b, bid: sink(probe(spec, spark, b, path, MAX_PROBE_ROWS), bid),
     )
@@ -434,25 +415,13 @@ def stats(
 
 
 def record_delete(spec: BandSpec, spark: SparkSession, ids, path: str) -> list[int]:
-    """Validate a takedown batch and land its durable ``_delete_intent``
-    (after finishing any earlier one); returns the sorted ids, empty
-    when there is nothing to delete."""
-    storefs.require_rename_fs(path, f"delete_from_{spec.name}_store")
-    repair(spec, path)
-    resume_pending_delete(spec, spark, path)
-    ids = sorted({int(i) for i in ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if ids:
-        intent = f"{storefs.strip_file_scheme(path)}/_delete_intent"
-        local_rows(spark, [(i,) for i in ids], f"{spec.id_col} bigint").write.mode(
-            "overwrite"
-        ).parquet(intent + "_tmp")
-        os.rename(intent + "_tmp", intent)
-    return ids
+    """Validate a takedown batch and land its durable intent (after
+    finishing any earlier one; ``storefs.record_takedown``);
+    returns the sorted ids, empty when there is nothing to delete."""
+    return storefs.record_takedown(
+        spark, path, ids, spec.id_col, f"delete_from_{spec.name}_store",
+        partial(repair, spec), partial(run_recorded_delete, spec),
+    )
 
 
 def delete(spec: BandSpec, spark: SparkSession, ids, path: str) -> None:
@@ -467,13 +436,9 @@ def resume_pending_delete(spec: BandSpec, spark: SparkSession, path: str) -> boo
     """Finish a takedown a crash interrupted, from its durable intent
     (repairing a half-swapped row table first). True if one was
     pending."""
-    intent = f"{storefs.strip_file_scheme(path)}/_delete_intent"
-    if not os.path.exists(intent):
-        return False
-    repair(spec, path)
-    ids = sorted(int(r[0]) for r in spark.read.parquet(intent).collect())
-    run_recorded_delete(spec, spark, ids, path)
-    return True
+    return storefs.resume_takedown(
+        spark, path, partial(repair, spec), partial(run_recorded_delete, spec)
+    )
 
 
 def run_recorded_delete(
@@ -497,7 +462,7 @@ def run_recorded_delete(
         )
         keep.write.mode("overwrite").parquet(f"{base}/{spec.rows}_compact_tmp")
         storefs.swap_in_compacted(path, (spec.rows,))
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
+    storefs.clear_takedown(path)
 
 
 # ------------------------------------------- self-contained rows ----
@@ -507,9 +472,7 @@ def corpus_slice(
     spec: BandSpec, spark: SparkSession, sf_dir: str, arriving: bool
 ) -> DataFrame:
     """The deterministic arriving / existing split of the corpus."""
-    src = table(spark, sf_dir, spec.corpus).where(F.col(spec.id_col).isNotNull())
-    on = F.pmod(F.col(spec.id_col), F.lit(ARRIVING_MOD)) == 0
-    return src.where(on if arriving else ~on)
+    return storefs.corpus_split(spark, sf_dir, spec.corpus, spec.id_col)[arriving]
 
 
 def corpus_store_path(
@@ -526,25 +489,12 @@ def corpus_store_path(
 def takedown_store_path(
     spec: BandSpec, cache: storefs.ScratchStoreCache, spark: SparkSession, sf_dir: str
 ) -> str:
-    """The session-memoized scratch store over the existing slice with
-    the victim slice deleted through ``delete`` — its own cache, never
-    the shared corpus store other rows probe."""
-
-    def build(path: str) -> None:
-        existing = corpus_slice(spec, spark, sf_dir, False)
-        victims = sorted(
-            int(r[0])
-            for r in existing.where(F.pmod(F.col(spec.id_col), F.lit(VICTIM_MOD)) == 1)
-            .select(spec.id_col)
-            .collect()
-        )
-        write(spec, spark, existing, path)
-        delete(spec, spark, victims, path)
-
-    return cache.get_or_build(spark, sf_dir, build)
+    """The session-memoized post-takedown scratch store
+    (``storefs.takedown_scratch_store``)."""
+    return storefs.takedown_scratch_store(
+        cache, spark, sf_dir, partial(write, spec), partial(delete, spec),
+        spec.corpus, spec.id_col,
+    )
 
 
-def victims_excluded_sql(id_col: str) -> str:
-    """The oracle predicate that drops the takedown victim slice."""
-    m = VICTIM_MOD
-    return f" AND (({id_col} % {m}) + {m}) % {m} <> 1"
+victims_excluded_sql = storefs.victims_excluded_sql

@@ -1,74 +1,54 @@
-"""Persisted BM25 inverted-index store: the incremental-lexical third
-member of the persisted-store family (``dedup_store``'s MinHash band
-store = text near-dup, ``semantic_store``'s SRP band store = embedding
+"""Persisted BM25 inverted-index store: the incremental-lexical member
+of the persisted-store family (``dedup_store``'s MinHash band store =
+text near-dup, ``semantic_store``'s SRP band store = embedding
 near-dup, THIS = lexical retrieval). ``bm25_top_docs`` scores a
 compile-time seed-query set in one corpus-scan plan; at 100 TB the
 corpus is indexed ONCE and every later query — targeted domain mining,
 DSIR seed expansion, eval-set retrieval — probes the written index
 reading ONLY the buckets its terms route to.
 
-Layout (the ``dedup_store`` partitioned-parquet pattern):
+Layout:
 
   * ``<path>/postings``: (term, doc_id, tf, dl) partitioned by
-    ``bucket = md5(term) mod N_BM25_BUCKETS``. Bucketing is a pure
-    refinement of term equality (equal term ⇒ equal bucket), so a
-    probe prunes to its query terms' buckets without changing
-    semantics; ALL of a term's postings share one bucket, so per-term
-    document frequency is computable from the pruned read alone.
+    ``bucket = md5(term) mod N_BM25_BUCKETS``; all of a term's postings
+    share one bucket, so per-term document frequency is computable
+    from the pruned read alone.
   * ``<path>/doclens``: (doc_id, dl) — the per-document accounting
-    table (the ``signatures``/``vectors`` analog): rebuild asset,
-    duplicate-replay detection asset, and the source the corpus stats
-    recompute from.
+    table: rebuild asset, duplicate-replay detection asset, and the
+    source the corpus stats recompute from.
   * ``<path>/stats``: ONE row (n_docs, total_len) — the BM25
     normalizer (N, avgdl). Maintained INCREMENTALLY (old + wave) and
-    committed via the ``storefs`` swap protocol, so a probe never
-    scans corpus-sized doclens just to learn two numbers.
+    committed via the ``storefs`` swap, so a probe never scans
+    corpus-sized doclens just to learn two numbers.
 
-Probe routing is DRIVER-SIDE ARITHMETIC, not a Spark job: a query's
-terms map to buckets by the same md5 the write used (`_bucket_of` —
-Python md5 ≡ Spark md5 ≡ DuckDB md5 on the same bytes), so the routed
-(bucket) set is known before any job runs — cheaper than even the
-band stores' one-job routing collect. The pruned postings read is
-additionally term-filtered (predicate pushdown inside the routed
-buckets), the hits are materialized once (hits-sized, with a
-fail-loud ceiling — the ``MAX_DEDUP_PROBE_ROWS`` class), and the
-scoring is the exact-rational BM25 arithmetic shared with
-``bm25_top_docs`` (text.py's float-determinism contract: both factors
-of every contribution are functions of exact BIGINTs; the house
-ROUND(·,6) → DECIMAL → order-free SUM collapses the ln ulp).
-
-Crash windows (the store-family discipline — every window has CODE
-for detection and repair, none are prose):
-
-  * append order is POSTINGS → DOCLENS → STATS-SWAP (the swap is the
-    commit point). Crash between postings and doclens: posting
-    doc_ids with no doclens row — ``bm25_store_stats``'s
-    ``n_unlisted_posting_docs`` > 0; repair = re-run the wave's
-    append, then ``repair_replayed_append`` clears the row-level
-    duplicates the re-run created.
-  * Crash before the stats swap: ``stats_lag`` =
-    distinct doclens ids − stats.n_docs > 0; repair =
-    ``repair_stats`` (recompute from doclens, swap).
-  * Watermark-window replay (``bm25_ingest_stream``): duplicate
-    doclens/postings rows — ``n_dup_doc_ids`` / ``n_dup_postings``
-    > 0; repair = ``repair_replayed_append`` (dropDuplicates rewrite
-    through the crash-safe swap, both tables).
+The protocol — routing, pruned probe read, append, ingest, compact,
+repair, takedown and the DURABILITY MODEL with its crash windows — is
+``postings_store``'s, shared with ``phrase_store``; this module holds
+the BM25 ``PostingsSpec`` with its doclens/stats tail, the
+exact-rational scoring shared with ``bm25_top_docs`` (text.py's
+float-determinism contract: both factors of every contribution are
+functions of exact BIGINTs; the house ROUND(·,6) → DECIMAL → order-free
+SUM collapses the ln ulp), the stats frame and the registered row.
+Stats name the crash-window counters: ``n_unlisted_posting_docs``
+(append died between postings and doclens), ``stats_lag`` (died
+before the stats swap; repair = ``repair_stats``) and
+``n_dup_doc_ids`` / ``n_dup_postings`` (watermark replay; repair =
+``repair_replayed_append``).
 
 Reference: the reference has no retrieval index (beyond-reference
-mandate, SURVEY.md §7 step 7); the layout is the repo's own
-``dedup_store`` pattern applied to the shared BM25 kernels
-(``text.py:1280`` — the exact-rational scoring and the `_lm_tokens`
-tokenizer are imported, not re-derived).
+mandate, SURVEY.md §7 step 7); the scoring kernels (``text.py:1280`` —
+the exact-rational BM25 and the `_lm_tokens` tokenizer) are imported,
+not re-derived.
 """
 
 from __future__ import annotations
 
-import hashlib
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
-from trisk_spark.functions import storefs
+from trisk_spark.catalog import local_rows
+from trisk_spark.functions import postings_store, storefs
 from trisk_spark.registry import register
 from trisk_spark.functions.text import (
     BM25_QUERIES,
@@ -77,9 +57,7 @@ from trisk_spark.functions.text import (
     _lm_tokens,
 )
 
-#: postings partition fan: directories = this; a probe prunes to ≤ its
-#: own query terms' buckets
-N_BM25_BUCKETS = 64
+N_BM25_BUCKETS = postings_store.N_BUCKETS
 
 #: ceiling on one probe's materialized hits (postings rows for the
 #: query's terms) — a stopword-ish term with corpus-scale postings
@@ -87,36 +65,11 @@ N_BM25_BUCKETS = 64
 #: through it silently (the MAX_DEDUP_PROBE_ROWS class)
 MAX_BM25_PROBE_POSTINGS = 2_000_000
 
-#: deterministic corpus split for the self-contained library row —
-#: the store-family shared split (dedup/semantic stores use the same)
-BM25_ARRIVING_MOD = 5
+BM25_ARRIVING_MOD = storefs.ARRIVING_MOD
+MAX_DELETE_IDS = storefs.MAX_DELETE_IDS
 
-
-def _bucket_of(term: str) -> int:
-    """Driver-side bucket of a term — MUST equal `_bucket_col` on the
-    same bytes: md5 hex, first 15 nibbles as an integer, mod N. md5 is
-    md5 in Python, Spark, and DuckDB, so routing needs no Spark job."""
-    return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:15], 16) % (
-        N_BM25_BUCKETS
-    )
-
-
-def _bucket_col(col=None):
-    """Spark twin of `_bucket_of` (the dedup_store `_bucket` pattern)."""
-    c = F.col("term") if col is None else col
-    return (
-        F.pmod(
-            F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint"),
-            F.lit(N_BM25_BUCKETS),
-        )
-        .cast("int")
-        .alias("bucket")
-    )
-
-
-def _write_tasks(spark: SparkSession) -> int:
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, min(conf, N_BM25_BUCKETS))
+_bucket_of = postings_store.bucket_of
+_bucket_col = postings_store.bucket_col
 
 
 def _wave_postings_doclens(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -162,32 +115,91 @@ def _wave_postings_doclens(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.col("p.term").alias("term"), "doc_id",
             F.col("p.tf").alias("tf"),
             F.col("dl").cast("bigint").alias("dl"),
-            _bucket_col(F.col("p.term")),
+            postings_store.bucket_col(F.col("p.term")),
         )
     )
     return postings, doclens
 
 
-def write_bm25_store(spark: SparkSession, docs: DataFrame, path: str) -> None:
-    """Persist the inverted index for a (doc_id, text) corpus frame:
-    bucket-partitioned postings (one writer task per directory — the
-    explicit-repartition rule so AQE can't serialize the 64-directory
-    write), the doclens accounting table, and the 1-row stats table."""
-    postings, doclens = _wave_postings_doclens(docs)
-    postings.repartition(_write_tasks(spark), "bucket").write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(f"{path}/postings")
+def _stats_of(doclens: DataFrame) -> DataFrame:
+    """The 1-row (n_docs, total_len) normalizer of a doclens frame."""
+    return doclens.agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
+    )
+
+
+def _commit_stats(path: str, stats: DataFrame) -> None:
+    """Swap a new stats row in through the crash-safe compaction swap."""
+    stats.coalesce(1).write.mode("overwrite").parquet(
+        f"{storefs.strip_file_scheme(path)}/stats_compact_tmp"
+    )
+    storefs.swap_in_compacted(path, ("stats",))
+
+
+def _write_tail(spark: SparkSession, path: str, doclens: DataFrame) -> None:
+    """Doclens, then the stats row, of a freshly written store."""
     doclens.write.mode("overwrite").parquet(f"{path}/doclens")
     # stats derive from the WRITTEN doclens parquet, not the doclens
     # lineage: the lineage replays the whole corpus tokenize a third
     # time just to sum two columns, while the written table is a
-    # 2-column scan (the write_dedup_store read-back rule; r18 —
-    # measured one full tokenize pass off the build).
-    stats = spark.read.parquet(f"{path}/doclens").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
+    # 2-column scan (r18 — measured one full tokenize pass off the
+    # build).
+    _stats_of(spark.read.parquet(f"{path}/doclens")).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/stats")
+
+
+def _append_tail(spark: SparkSession, path: str, doclens: DataFrame, wave) -> None:
+    """Doclens append, then the stats row old + wave: O(wave), never a
+    corpus rescan."""
+    doclens.write.mode("append").parquet(f"{path}/doclens")
+    old = spark.read.parquet(f"{path}/stats").collect()[0]
+    _commit_stats(
+        path,
+        local_rows(
+            spark,
+            [(int(old["n_docs"]) + wave["n"], int(old["total_len"]) + wave["w_len"])],
+            "n_docs bigint, total_len bigint",
+        ),
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+
+def _delete_tail(spark: SparkSession, path: str, ids: list) -> None:
+    """Doclens without the victims, then a stats recompute, each
+    through the swap — re-runnable from the intent at every step."""
+    doclens = spark.read.parquet(f"{path}/doclens")
+    if doclens.where(F.col("doc_id").isin(ids)).limit(1).count() > 0:
+        doclens.where(~F.col("doc_id").isin(ids)).write.mode("overwrite").parquet(
+            f"{storefs.strip_file_scheme(path)}/doclens_compact_tmp"
+        )
+        storefs.swap_in_compacted(path, ("doclens",))
+    # stats recompute is unconditional while the intent exists: after
+    # the doclens swap a replay can no longer see the victims, but the
+    # stats row may still carry them
+    _commit_stats(path, _stats_of(spark.read.parquet(f"{path}/doclens")))
+
+
+SPEC = postings_store.PostingsSpec(
+    name="bm25",
+    columns=("term", "doc_id", "tf", "dl"),
+    to_wave=_wave_postings_doclens,
+    max_probe_postings=MAX_BM25_PROBE_POSTINGS,
+    tables=("postings", "doclens", "stats"),
+    measures=lambda: [F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("w_len")],
+    write_tail=_write_tail,
+    append_tail=_append_tail,
+    delete_tail=_delete_tail,
+)
+
+_run_recorded_delete = partial(postings_store.run_recorded_delete, SPEC)
+
+
+def write_bm25_store(spark: SparkSession, docs: DataFrame, path: str) -> None:
+    """Persist the inverted index for a (doc_id, text) corpus frame:
+    bucket-partitioned postings, the doclens accounting table, and the
+    1-row stats table."""
+    postings_store.write(SPEC, spark, docs, path)
 
 
 def probe_bm25_store(
@@ -218,24 +230,7 @@ def probe_bm25_store(
             "query_id int, doc_id bigint, n_terms bigint, "
             "score double, rank int",
         )
-    buckets = sorted({_bucket_of(t) for t in terms})
-    hits = spark.read.parquet(f"{path}/postings")
-    if len(buckets) < N_BM25_BUCKETS:
-        hits = hits.where(F.col("bucket").isin(buckets))
-    # LAZY checkpoint: the guard count below is the first action and
-    # materializes the pruned hits once for every downstream consumer
-    # (df aggregate, scoring join) — eager paid one extra scheduled
-    # job per probe (r17)
-    hits = hits.where(F.col("term").isin(terms)).select(
-        "term", "doc_id", "tf", "dl"
-    ).localCheckpoint(eager=ckpt_eager())
-    n_hits = hits.count()
-    if n_hits > max_postings:
-        raise ValueError(
-            f"bm25 probe would materialize {n_hits} postings rows > "
-            f"{max_postings} — a queried term is degenerate-frequent "
-            "(near-zero idf anyway); drop it or raise max_postings"
-        )
+    hits = postings_store.hits(SPEC, spark, path, terms, max_postings)
     df = hits.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     qterms = local_rows(
         spark,
@@ -284,153 +279,50 @@ def probe_bm25_store(
     )
 
 
-def append_bm25_store(
-    spark: SparkSession, new_docs: DataFrame, path: str
-) -> None:
-    """ADMIT a wave into the index: append its postings into the
-    buckets they route to (plain file append under partitionBy — no
-    bucket rewrite: postings are per-(term, doc) facts, not a capped
-    set, so untouched AND touched buckets alike keep their bytes),
-    append its doclens, then commit the incrementally-updated stats
-    row through the ``storefs`` swap (old + wave — O(wave), never a
-    corpus rescan).
-
-    Equality contract (pytest-pinned): append(existing store, wave) ≡
-    ``write_bm25_store`` over existing ∪ wave, table-for-table. Caller
-    contract: wave doc_ids are disjoint from the store's (each
-    document indexed once — an admission gate's job; a replayed wave
-    is the documented watermark window, detected by
-    ``n_dup_doc_ids``/``n_dup_postings`` and repaired by
-    ``repair_replayed_append``)."""
-    storefs.require_no_pending_delete(path, "append_bm25_store", "bm25")
-    postings, doclens = _wave_postings_doclens(new_docs)
-    # LAZY checkpoint (the ingest stream already does this): doclens is
-    # consumed twice downstream (the guard aggregate, then the doclens
-    # append) and each consumption replays the wave tokenize; the
-    # checkpoint materializes the wave-sized (doc_id, dl) rows once at
-    # the guard aggregate (r18).
-    doclens = doclens.localCheckpoint(eager=ckpt_eager())
-    _append_wave(spark, postings, doclens, path)
+def append_bm25_store(spark: SparkSession, new_docs: DataFrame, path: str) -> None:
+    """ADMIT a wave: postings into the buckets they route to, then
+    doclens, then the incrementally-updated stats row through the
+    swap. append(store, wave) ≡ ``write_bm25_store`` over existing ∪
+    wave, table for table (``postings_store.append``)."""
+    postings_store.append(SPEC, spark, new_docs, path)
 
 
-def _append_wave(
-    spark: SparkSession, postings: DataFrame, doclens: DataFrame, path: str
-) -> None:
-    """The shared append tail over already-derived wave frames (r17
-    review, the phrase-store finding's twin: the ingest stream
-    checkpoints doclens for its sink — recomputing both frames inside
-    ``append_bm25_store`` paid the dominant explode/group shuffle
-    twice per micro-batch)."""
-    wave = doclens.agg(
-        F.count("*").cast("bigint").alias("w_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("w_len"),
-    ).collect()[0]
-    if wave["w_docs"] == 0:
-        return
-    postings.repartition(_write_tasks(spark), "bucket").write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(f"{path}/postings")
-    doclens.write.mode("append").parquet(f"{path}/doclens")
-    old = spark.read.parquet(f"{path}/stats").collect()[0]
-    new_stats = local_rows(
-        spark,
-        [(
-            int(old["n_docs"]) + int(wave["w_docs"]),
-            int(old["total_len"]) + int(wave["w_len"]),
-        )],
-        "n_docs bigint, total_len bigint",
+def bm25_ingest_stream(spark: SparkSession, docs_stream: DataFrame, path: str, sink):
+    """``append_bm25_store`` per micro-batch under the persisted
+    batch-id replay guard; ``sink(wave_doclens_df, batch_id)`` receives
+    each admitted wave's (doc_id, dl) frame, materialized."""
+    return postings_store.ingest_stream(SPEC, spark, docs_stream, path, sink)
+
+
+def _queries_of(rows) -> dict[int, tuple[str, ...]]:
+    queries: dict[int, tuple[str, ...]] = {}
+    for r in rows:
+        queries[int(r["query_id"])] = queries.get(int(r["query_id"]), ()) + (r["term"],)
+    return queries
+
+
+def bm25_probe_stream(spark: SparkSession, queries_stream: DataFrame, path: str, sink):
+    """Streaming retrieval: each micro-batch of (query_id, term) rows is
+    ``probe_bm25_store`` with its own driver-side routing (stream ≡
+    batch pytest-pinned). The sink must materialize inside the call."""
+    return postings_store.probe_stream(
+        queries_stream,
+        lambda rows: probe_bm25_store(spark, path, _queries_of(rows)),
+        sink,
     )
-    base = storefs.strip_file_scheme(path)
-    new_stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/stats_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("stats",))
-
-
-def bm25_ingest_stream(
-    spark: SparkSession, docs_stream: DataFrame, path: str, sink
-):
-    """CONTINUOUS indexing — ``append_bm25_store`` per micro-batch
-    with the store-family replay guard (the persisted batch-id
-    watermark; a replayed batch ≤ the watermark is skipped entirely).
-    ``sink(wave_doclens_df, batch_id)`` receives each admitted wave's
-    (doc_id, dl) frame, materialized before the call returns the
-    batch. Remaining crash window: a crash between the append and the
-    watermark write replays one wave — detection =
-    ``n_dup_doc_ids``/``n_dup_postings`` > 0, repair =
-    ``repair_replayed_append`` (both code, forced-crash
-    pytest-pinned)."""
-    storefs.require_rename_fs(path, "bm25_ingest_stream")
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = storefs.read_ingest_watermark(path)
-        if wm is not None and batch_id <= wm:
-            return
-        storefs.require_no_pending_delete(
-            path, "bm25_ingest_stream", "bm25"
-        )
-        batch_df = batch_df.persist()
-        try:
-            # ONE wave derivation per batch: the frames feed both the
-            # append and the sink (r17 review — the first cut
-            # recomputed the explode/group shuffle inside
-            # append_bm25_store)
-            postings, doclens = _wave_postings_doclens(batch_df)
-            doclens = doclens.localCheckpoint()
-            _append_wave(spark, postings, doclens, path)
-            storefs.write_ingest_watermark(path, batch_id)
-            sink(doclens, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
-def bm25_probe_stream(
-    spark: SparkSession, queries_stream: DataFrame, path: str, sink
-):
-    """Streaming retrieval over the written index: each micro-batch of
-    (query_id, term) rows probes the store with ITS OWN driver-side
-    bucket routing (``foreachBatch`` turns the batch into a plain
-    frame, so the per-batch pruned read is exactly
-    ``probe_bm25_store`` — the ``dedup_probe_stream`` stream-static
-    pattern). Queries are independent rows, so the union of per-batch
-    results equals the one-batch image (stream ≡ batch
-    pytest-pinned). Sink contract: fully materialize inside the
-    call."""
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.collect()  # queries are human-scale: bounded
-        queries: dict[int, tuple[str, ...]] = {}
-        for r in rows:
-            queries.setdefault(int(r["query_id"]), ())
-            queries[int(r["query_id"])] += (r["term"],)
-        if not queries:
-            return
-        sink(probe_bm25_store(spark, path, queries), batch_id)
-
-    return queries_stream.writeStream.outputMode("append").foreachBatch(fb)
 
 
 def repair_bm25_store(path: str) -> None:
-    """``storefs.repair_store`` over this store's three tables — see
-    that docstring for the crash states and repairs."""
-    storefs.repair_store(path, ("postings", "doclens", "stats"))
+    """Finish or roll back a half-swapped table (``storefs.repair_store``)."""
+    postings_store.repair(SPEC, path)
 
 
 def repair_replayed_append(spark: SparkSession, path: str) -> None:
-    """Repair the ingest stream's watermark crash window (replayed
-    wave): dropDuplicates rewrites of ``doclens`` (by doc_id) and
-    ``postings`` (by the composite (term, doc_id) key, preserving the
-    bucket partitioning) through the crash-safe swap protocol, then a
-    stats recompute — replayed rows are byte-identical per key, so
-    keeping any one is exact. Probe ≡ never-crashed twin
-    pytest-pinned."""
+    """Repair a replayed wave: dropDuplicates rewrites of doclens (by
+    doc_id) and postings (by (term, doc_id)) through the crash-safe
+    swap, then a stats recompute."""
     storefs.repair_replayed_append(spark, path, "doclens", "doc_id")
-    storefs.repair_replayed_append(
-        spark, path, "postings", ["term", "doc_id"],
-        partition_by=("bucket",),
-    )
+    postings_store.repair_replayed_append(SPEC, spark, path)
     repair_stats(spark, path)
 
 
@@ -441,37 +333,13 @@ def repair_stats(spark: SparkSession, path: str) -> None:
     2-column doclens table: recovery-path only."""
     storefs.require_rename_fs(path, "repair_stats")
     storefs.repair_store(path, ("stats",))
-    stats = spark.read.parquet(f"{path}/doclens").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
-    )
-    base = storefs.strip_file_scheme(path)
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/stats_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("stats",))
+    _commit_stats(path, _stats_of(spark.read.parquet(f"{path}/doclens")))
 
 
-def compact_bm25_store(
-    spark: SparkSession, path: str, doclen_files: int = 8
-) -> None:
-    """Post-ingest maintenance — the ``compact_dedup_store`` image:
-    rewrite doclens into ``doclen_files`` files and postings into one
-    file per bucket partition, then SWAP through the shared crash-safe
-    protocol (repair-on-entry, overwrite-mode tmp builds,
-    recovery-ordered per-table swap). Probe ≡ pre-compact
-    pytest-pinned. Local/HDFS-rename filesystems only (fail-loud)."""
-    storefs.require_rename_fs(path, "compact_bm25_store")
-    repair_bm25_store(path)
-    dl = spark.read.parquet(f"{path}/doclens").coalesce(max(1, doclen_files))
-    dl.write.mode("overwrite").parquet(f"{path}/doclens_compact_tmp")
-    postings = spark.read.parquet(f"{path}/postings").repartition(
-        _write_tasks(spark), "bucket"
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/postings_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("doclens", "postings"))
+def compact_bm25_store(spark: SparkSession, path: str, doclen_files: int = 8) -> None:
+    """Rewrite doclens into ``doclen_files`` files and postings into one
+    file per bucket, then swap them in (content untouched)."""
+    postings_store.compact(SPEC, spark, path, {"doclens": doclen_files})
 
 
 def bm25_store_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -496,19 +364,6 @@ def bm25_store_stats(spark: SparkSession, path: str) -> DataFrame:
         F.count_distinct(F.col("doc_id")).cast("bigint").alias("_n_distinct"),
     )
     p = spark.read.parquet(f"{path}/postings")
-    per_term = p.groupBy("term").agg(F.count("*").alias("n"))
-    pa = p.agg(
-        F.count("*").cast("bigint").alias("n_posting_rows"),
-        (F.count("*") - F.count_distinct("term", "doc_id"))
-        .cast("bigint")
-        .alias("n_dup_postings"),
-    )
-    ta = per_term.agg(
-        F.count("*").cast("bigint").alias("n_terms"),
-        F.coalesce(F.max("n"), F.lit(0))
-        .cast("bigint")
-        .alias("max_term_postings"),
-    )
     unlisted = (
         p.select("doc_id")
         .distinct()
@@ -518,8 +373,7 @@ def bm25_store_stats(spark: SparkSession, path: str) -> DataFrame:
     s = spark.read.parquet(f"{path}/stats")
     return (
         s.crossJoin(F.broadcast(d))
-        .crossJoin(F.broadcast(pa))
-        .crossJoin(F.broadcast(ta))
+        .crossJoin(F.broadcast(postings_store.health(spark, path)))
         .crossJoin(F.broadcast(unlisted))
         .select(
             "n_docs", "total_len", "n_doclen_rows", "n_posting_rows",
@@ -534,33 +388,13 @@ def bm25_store_stats(spark: SparkSession, path: str) -> DataFrame:
 
 # ------------------------------------------- self-contained library --
 
-#: one bm25-store scratch dir per (session, corpus) — the shared
-#: ``storefs.ScratchStoreCache`` (r17 review consolidated the eight
-#: pasted copies). Unlike the dedup/semantic caches this one memoizes
-#: the FULLY-BUILT store (write existing + append arriving): the
-#: append is part of the op under test, and a repeat call must probe,
-#: not re-append.
+#: one bm25-store scratch dir per (session, corpus), memoizing the
+#: FULLY-BUILT store (write existing + append arriving): the append is
+#: part of the op under test, and a repeat call must probe, not
+#: re-append.
 _BM25_STORES = storefs.ScratchStoreCache("trisk_bm25_store_")
 
-
-def corpus_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized scratch index: WRITTEN over the
-    corpus's existing slice (doc_id % MOD != 0), then the arriving
-    slice APPENDED — built once per (session, corpus); repeat calls
-    probe the artifacts (the store economics)."""
-
-    def build(path: str) -> None:
-        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-        existing = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(BM25_ARRIVING_MOD)) != 0
-        )
-        arriving = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(BM25_ARRIVING_MOD)) == 0
-        )
-        write_bm25_store(spark, existing, path)
-        append_bm25_store(spark, arriving, path)
-
-    return _BM25_STORES.get_or_build(spark, sf_dir, build)
+corpus_store_path = partial(postings_store.corpus_store_path, SPEC, _BM25_STORES)
 
 
 BM25_INCREMENTAL_SQL = BM25_TOP_DOCS_SQL
@@ -583,128 +417,21 @@ def bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_bm25_store(spark, corpus_store_path(spark, sf_dir))
 
 
-# ------------------------------------------------ takedown (r14) -----
-
-#: fail-loud ceiling on a single takedown batch (the dedup store's
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
+# ------------------------------------------------------- takedown ----
 
 
 def delete_from_bm25_store(spark: SparkSession, doc_ids, path: str) -> None:
-    """TAKEDOWN — remove documents from the persisted inverted index so
-    no future probe can retrieve them. Postings are uncapped per-doc
-    facts, so delete ≡ ``write_bm25_store`` over the corpus WITHOUT the
-    victims is a plain filter per touched bucket (no re-derivation
-    needed — postings are uncapped facts, so filtering IS rebuilding);
-    loner buckets are correctly emptied (directory cleared), doclens
-    and the 1-row stats recompute through the crash-safe swap, and
-    every crash window resumes to completion from the durable
-    ``_delete_intent`` (``resume_pending_delete``). Because the kept
-    postings have no other durable source (unlike the band stores,
-    which re-derive from the signatures/vectors table swapped last),
-    they are STAGED durably via the ``storefs`` staged-partition
-    protocol before any live bucket directory is cleared — a crash
-    between the clear and the swap replays from the committed staging,
-    never from driver memory. Cost: one pushdown scan of the
-    victims' postings (routing — postings are bucketed by TERM, so
-    this is the one per-store scan a takedown pays), a rewrite of only
-    the touched bucket directories, a doclens rewrite (narrow
-    2-int-per-doc table), and a 1-row stats recompute."""
-    import os
-
-    storefs.require_rename_fs(path, "delete_from_bm25_store")
-    repair_bm25_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in doc_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
+    """TAKEDOWN: afterwards the index ≡ ``write_bm25_store`` over the
+    corpus without the victims — postings through the staged partition
+    delete, then doclens and the stats row; every crash window resumes
+    from the durable intent (``postings_store``)."""
+    ids = postings_store.record_delete(SPEC, spark, doc_ids, path)
+    if ids:
+        # through the module name, so a patched _run_recorded_delete
+        # can crash a takedown after its intent landed
+        _run_recorded_delete(spark, ids, path)
 
 
 def resume_pending_delete(spark: SparkSession, path: str) -> bool:
-    """Finish a takedown a crash interrupted (idempotent at every
-    crash point — the ``dedup_store`` contract). Self-sufficient at
-    every crash point: repairs any half-swapped doclens/stats FIRST
-    (a crash inside ``swap_in_compacted`` leaves the live table renamed
-    to ``_old`` — a standalone resume must not fail reading it), then
-    re-runs the recorded delete, whose own first step consumes any
-    committed postings staging. Returns True if there was one to
-    finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_bm25_store(path)
-    ids = sorted(int(r.doc_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
-
-
-def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    """The recorded-delete state machine, re-runnable from the durable
-    ``_delete_intent`` at every crash point. Postings go through the
-    ``storefs`` staged-partition protocol: kept rows of the touched
-    buckets are written DURABLY (staged dir committed by rename) before
-    any live bucket directory is destroyed, so a crash anywhere between
-    the clear and the swap resumes from the staging, never from memory
-    (the r14 hole: a localCheckpoint'ed kept frame is gone on crash,
-    and with the victims' rows already rmtree'd the re-run could no
-    longer identify the damaged buckets)."""
-    import shutil
-
-    base = storefs.strip_file_scheme(path)
-    # finish any committed-but-unswapped staging a prior crash left —
-    # AFTER this the live postings hold no half-cleared buckets
-    storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    postings = spark.read.parquet(f"{path}/postings")
-    buckets = sorted(
-        int(r["bucket"])
-        for r in postings.where(F.col("doc_id").isin(ids))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    if buckets:
-        kept = (
-            postings.where(F.col("bucket").isin(buckets))
-            .where(~F.col("doc_id").isin(ids))
-            .select("term", "doc_id", "tf", "dl", "bucket")
-        )
-        storefs.stage_partition_delete(
-            spark, path, "postings", "bucket", buckets, kept,
-            write_tasks=_write_tasks(spark),
-        )
-        storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    doclens = spark.read.parquet(f"{path}/doclens")
-    if doclens.where(F.col("doc_id").isin(ids)).limit(1).count() > 0:
-        keep_dl = doclens.where(~F.col("doc_id").isin(ids)).localCheckpoint()
-        keep_dl.write.mode("overwrite").parquet(
-            f"{base}/doclens_compact_tmp"
-        )
-        storefs.swap_in_compacted(path, ("doclens",))
-    # stats recompute is unconditional while the intent exists: after
-    # the doclens swap a replay can no longer see the victims, but the
-    # stats row may still carry them
-    new_stats = spark.read.parquet(f"{path}/doclens").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
-    )
-    new_stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/stats_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("stats",))
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
+    """Finish a takedown a crash interrupted; True if one was pending."""
+    return postings_store.resume_pending_delete(SPEC, spark, path)

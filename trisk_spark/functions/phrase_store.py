@@ -1,30 +1,29 @@
 """Persisted POSITIONAL postings store: the phrase/proximity member of
-the persisted-store family (the r17 build the r16 round sketched in
-registry.py). ``phrase_search`` answers a probe SET with one map-only
-corpus scan — right for ad-hoc probes, wrong for a STANDING phrase
-workload: at 100 TB every new watchlist pays a full corpus read. This
-store pays the positional-index build ONCE and serves every later
-phrase/proximity probe from a driver-routed, partition-pruned read of
-only the buckets its terms live in — the ``bm25_store`` economics
-applied to Lucene-style positional semantics.
+the persisted-store family. ``phrase_search`` answers a probe SET with
+one map-only corpus scan — right for ad-hoc probes, wrong for a
+STANDING phrase workload: at 100 TB every new watchlist pays a full
+corpus read. This store pays the positional-index build ONCE and
+serves every later phrase/proximity probe from a driver-routed,
+partition-pruned read of only the buckets its terms live in — the
+``bm25_store`` economics applied to Lucene-style positional semantics.
 
-Layout (the ``bm25_store`` partitioned-parquet pattern, ONE table):
+Layout: ONE table, ``<path>/postings``: (term, doc_id, positions
+array<int>) partitioned by ``bucket = md5(term) mod N_PHRASE_BUCKETS``.
+``positions`` is the sorted 1-based token-offset list of every
+occurrence of ``term`` in ``doc_id`` under the shared ``_lm_tokens``
+tokenizer — 1-based so the position arithmetic is literally the batch
+kernel's ``element_at`` indices. There is deliberately NO
+doclens/stats side table: phrase counting needs no corpus normalizer,
+so an append is ONE job-level parquet commit and the only append crash
+window is the watermark replay (``n_dup_postings`` > 0, repaired by
+``repair_replayed_append``).
 
-  * ``<path>/postings``: (term, doc_id, positions array<int>)
-    partitioned by ``bucket = md5(term) mod N_PHRASE_BUCKETS``.
-    ``positions`` is the sorted 1-based token-offset list of every
-    occurrence of ``term`` in ``doc_id`` under the shared ``_lm_tokens``
-    tokenizer — 1-based so the position arithmetic is literally the
-    batch kernel's ``element_at`` indices. Bucketing is a pure
-    refinement of term equality, so a probe prunes to its phrase
-    terms' buckets without changing semantics. There is deliberately
-    NO doclens/stats side table (the registry sketch's "minus
-    doclens/stats"): phrase counting needs no corpus normalizer, and a
-    single-table store makes every append ONE job-level parquet commit
-    — the wave lands whole or not at all, so the only crash window
-    left is the documented watermark replay (duplicate (term, doc_id)
-    rows; detected by ``n_dup_postings``, repaired by
-    ``repair_replayed_append``).
+The protocol — routing, pruned probe read with its fail-loud ceiling,
+append, ingest, compact, repair, takedown and the DURABILITY MODEL
+with its crash windows — is ``postings_store``'s, shared with
+``bm25_store``; this module holds the positional ``PostingsSpec``,
+the position-set counting, the stats frame, the DuckDB oracles and the
+registered rows.
 
 Probe semantics — must equal ``text.phrase_search_frame`` ROW FOR ROW
 (pytest-pinned, and the ``phrase_incremental`` library op puts the
@@ -46,41 +45,20 @@ Both are in-row array lambdas over three bounded position arrays —
 whole-stage-codegen JVM expressions, no Python in the hot path, and
 the only shuffle is the hits-sized per-query top-k.
 
-Scale shape: the probe's postings read prunes to ≤ |distinct phrase
-words| buckets (driver-side md5 routing — no routing job), is
-term-pushdown-filtered inside them, and materializes once behind a
-fail-loud ceiling (the ``MAX_BM25_PROBE_POSTINGS`` class: a
-stopword-anchored phrase is honest-but-huge work). Per-doc position
-arrays are token-count-bounded facts, not caps, so append and delete
-are plain per-bucket facts operations — no re-derivation.
-
-Crash windows (store-family discipline — detection and repair are
-CODE): watermark replay → ``n_dup_postings`` > 0 →
-``repair_replayed_append``; takedown at any point → durable
-``_delete_intent`` + staged-partition protocol →
-``resume_pending_delete``; compaction/repair crash → the shared
-``storefs`` three-state swap repair.
-
 Reference: the reference has no retrieval index at all (beyond-
-reference mandate, SURVEY.md §7 step 7); layout and verb set are the
-repo's own ``bm25_store`` pattern (bm25_store.py:1-62) applied to the
-positional kernel shared with ``text.phrase_search_frame``
-(text.py — the one-kernel rule: the tokenizer and the probe
-derivation are imported, never re-derived).
+reference mandate, SURVEY.md §7 step 7); the tokenizer and the probe
+derivation are shared with ``text.phrase_search_frame`` (text.py — the
+one-kernel rule: imported, never re-derived).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
-from trisk_spark.functions import storefs
-from trisk_spark.functions.bm25_store import (
-    N_BM25_BUCKETS,
-    _bucket_col,
-    _bucket_of,
-    _write_tasks,
-)
+from trisk_spark.catalog import local_rows
+from trisk_spark.functions import postings_store, storefs
 from trisk_spark.functions.text import (
     PHRASE_SEARCH_SQL,
     PHRASE_TOP_K,
@@ -90,26 +68,18 @@ from trisk_spark.functions.text import (
     _phrase_search_sql,
 )
 
-#: postings partition fan — same md5 routing as the bm25 store: the
-#: bucket expressions AND the bucket-domain constant are IMPORTED from
-#: it (an alias, not a copy — r17 review: a redefined 64 would let the
-#: prune guard and the write fan silently desync from the real bucket
-#: domain if the bm25 constant ever changed), so the two lexical
-#: stores can never drift apart on routing. ``_write_tasks`` is shared
-#: for the same reason.
-N_PHRASE_BUCKETS = N_BM25_BUCKETS
+N_PHRASE_BUCKETS = postings_store.N_BUCKETS
 
 #: fail-loud ceiling on one probe's materialized postings rows (the
-#: MAX_BM25_PROBE_POSTINGS class)
+#: MAX_BM25_PROBE_POSTINGS class: a stopword-anchored phrase is
+#: honest-but-huge work)
 MAX_PHRASE_PROBE_POSTINGS = 2_000_000
 
-#: deterministic corpus split for the self-contained library row —
-#: the store-family shared split (dedup/semantic/bm25 use the same)
-PHRASE_ARRIVING_MOD = 5
+PHRASE_ARRIVING_MOD = storefs.ARRIVING_MOD
+TAKEDOWN_VICTIM_MOD = storefs.VICTIM_MOD
+MAX_DELETE_IDS = storefs.MAX_DELETE_IDS
 
-#: fail-loud ceiling on a single takedown batch (the store-family
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
+_bucket_of = postings_store.bucket_of
 
 
 def _wave_postings(docs: DataFrame) -> DataFrame:
@@ -130,59 +100,35 @@ def _wave_postings(docs: DataFrame) -> DataFrame:
                 F.collect_list((F.col("pos") + 1).cast("int"))
             ).alias("positions")
         )
-        .select("term", "doc_id", "positions", _bucket_col())
+        .select("term", "doc_id", "positions", postings_store.bucket_col())
     )
 
 
-def write_phrase_store(
-    spark: SparkSession, docs: DataFrame, path: str
-) -> None:
+SPEC = postings_store.PostingsSpec(
+    name="phrase",
+    columns=("term", "doc_id", "positions"),
+    to_wave=lambda docs: (_wave_postings(docs), None),
+    max_probe_postings=MAX_PHRASE_PROBE_POSTINGS,
+    tables=("postings",),
+)
+
+_run_recorded_delete = partial(postings_store.run_recorded_delete, SPEC)
+
+
+def write_phrase_store(spark: SparkSession, docs: DataFrame, path: str) -> None:
     """Persist the positional index for a (doc_id, text) corpus frame:
-    bucket-partitioned postings, one writer task per directory (the
-    explicit-repartition rule so AQE can't serialize the 64-directory
-    write)."""
-    _wave_postings(docs).repartition(
-        _write_tasks(spark), "bucket"
-    ).write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/postings"
-    )
+    bucket-partitioned postings, one writer task per directory."""
+    postings_store.write(SPEC, spark, docs, path)
 
 
-def append_phrase_store(
-    spark: SparkSession, new_docs: DataFrame, path: str
-) -> None:
-    """ADMIT a wave: append its postings into the buckets they route
-    to — ONE plain parquet append under partitionBy (positions are
-    per-(term, doc) facts, not a capped set, so untouched and touched
-    buckets alike keep their bytes), job-level commit: the wave lands
-    whole or not at all. Equality contract (pytest-pinned):
-    append(existing store, wave) ≡ ``write_phrase_store`` over
-    existing ∪ wave. Caller contract: wave doc_ids disjoint from the
-    store's (a replayed wave is the documented watermark window —
-    detected by ``n_dup_postings``, repaired by
-    ``repair_replayed_append``)."""
-    # this store is NOT among admission_wave's composed targets, so
-    # its append verbs are its only admission path and carry the
-    # guard themselves (r17 review)
-    storefs.require_no_pending_delete(
-        path, "append_phrase_store", "phrase"
-    )
-    postings = _wave_postings(new_docs).localCheckpoint()
-    if postings.limit(1).count() == 0:
-        return
-    _append_wave_postings(spark, postings, path)
-
-
-def _append_wave_postings(
-    spark: SparkSession, postings: DataFrame, path: str
-) -> None:
-    """The shared append tail over an already-materialized wave frame
-    (r17 review: the ingest stream checkpoints the wave for its sink —
-    recomputing it inside ``append_phrase_store`` paid the dominant
-    explode/group shuffle twice per micro-batch)."""
-    postings.repartition(_write_tasks(spark), "bucket").write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(f"{path}/postings")
+def append_phrase_store(spark: SparkSession, new_docs: DataFrame, path: str) -> None:
+    """ADMIT a wave: ONE plain parquet append of its postings under
+    partitionBy — the wave lands whole or not at all. append(store,
+    wave) ≡ ``write_phrase_store`` over existing ∪ wave. This store is
+    not among ``admission_wave``'s composed targets, so this verb is
+    its only admission path and carries the pending-takedown guard
+    (``postings_store.append``)."""
+    postings_store.append(SPEC, spark, new_docs, path)
 
 
 def probe_phrase_store(
@@ -208,22 +154,7 @@ def probe_phrase_store(
             "n_exact bigint, n_prox bigint, rank int",
         )
     terms = sorted({t for _q, ws in probes for t in ws})
-    buckets = sorted({_bucket_of(t) for t in terms})
-    hits = spark.read.parquet(f"{path}/postings")
-    if len(buckets) < N_PHRASE_BUCKETS:
-        hits = hits.where(F.col("bucket").isin(buckets))
-    # LAZY checkpoint: the guard count below is the first action and
-    # materializes the pruned hits once (the bm25_store probe rule, r17)
-    hits = hits.where(F.col("term").isin(terms)).select(
-        "term", "doc_id", "positions"
-    ).localCheckpoint(eager=ckpt_eager())
-    n_hits = hits.count()
-    if n_hits > max_postings:
-        raise ValueError(
-            f"phrase probe would materialize {n_hits} postings rows > "
-            f"{max_postings} — a phrase word is degenerate-frequent; "
-            "drop that phrase or raise max_postings"
-        )
+    hits = postings_store.hits(SPEC, spark, path, terms, max_postings)
     qterms = local_rows(
         spark,
         [
@@ -290,100 +221,43 @@ def probe_phrase_store(
     )
 
 
-def phrase_ingest_stream(
-    spark: SparkSession, docs_stream: DataFrame, path: str, sink
-):
-    """CONTINUOUS indexing — ``append_phrase_store`` per micro-batch
-    with the store-family replay guard (persisted batch-id watermark;
-    a replayed batch ≤ the watermark is skipped entirely).
-    ``sink(wave_postings_df, batch_id)`` receives each admitted wave's
-    (term, doc_id, positions) frame, materialized before the call
-    returns. Remaining crash window: a crash between the append and
-    the watermark write replays one wave — detection =
-    ``n_dup_postings`` > 0, repair = ``repair_replayed_append`` (both
-    code, forced-crash pytest-pinned)."""
-    storefs.require_rename_fs(path, "phrase_ingest_stream")
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = storefs.read_ingest_watermark(path)
-        if wm is not None and batch_id <= wm:
-            return
-        storefs.require_no_pending_delete(
-            path, "phrase_ingest_stream", "phrase"
-        )
-        batch_df = batch_df.persist()
-        try:
-            # ONE wave derivation per batch: the checkpointed frame
-            # feeds both the append and the sink (r17 review — the
-            # first cut recomputed the explode/group shuffle inside
-            # append_phrase_store)
-            wave = _wave_postings(batch_df).localCheckpoint()
-            if wave.limit(1).count() > 0:
-                _append_wave_postings(spark, wave, path)
-            storefs.write_ingest_watermark(path, batch_id)
-            sink(wave, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
+def phrase_ingest_stream(spark: SparkSession, docs_stream: DataFrame, path: str, sink):
+    """``append_phrase_store`` per micro-batch under the persisted
+    batch-id replay guard; ``sink(wave_postings_df, batch_id)``
+    receives each admitted wave's (term, doc_id, positions, bucket)
+    frame, materialized."""
+    return postings_store.ingest_stream(SPEC, spark, docs_stream, path, sink)
 
 
-def phrase_probe_stream(
-    spark: SparkSession, probes_stream: DataFrame, path: str, sink
-):
-    """Streaming phrase retrieval over the written index: each
-    micro-batch of (query_id, w0, w1, w2) rows probes the store with
-    ITS OWN driver-side bucket routing (the ``bm25_probe_stream``
-    stream-static pattern). Probes are independent rows, so the union
-    of per-batch results equals the one-batch image (stream ≡ batch
-    pytest-pinned). Sink contract: fully materialize inside the
-    call."""
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.collect()  # probe sets are human-scale: bounded
-        probes = [
-            (int(r["query_id"]), [r["w0"], r["w1"], r["w2"]]) for r in rows
-        ]
-        if not probes:
-            return
-        sink(probe_phrase_store(spark, path, probes), batch_id)
-
-    return probes_stream.writeStream.outputMode("append").foreachBatch(fb)
+def phrase_probe_stream(spark: SparkSession, probes_stream: DataFrame, path: str, sink):
+    """Streaming phrase retrieval: each micro-batch of (query_id, w0,
+    w1, w2) rows is ``probe_phrase_store`` with its own driver-side
+    routing (stream ≡ batch pytest-pinned). The sink must materialize
+    inside the call."""
+    return postings_store.probe_stream(
+        probes_stream,
+        lambda rows: probe_phrase_store(
+            spark,
+            path,
+            [(int(r["query_id"]), [r["w0"], r["w1"], r["w2"]]) for r in rows],
+        ),
+        sink,
+    )
 
 
 def repair_phrase_store(path: str) -> None:
-    """``storefs.repair_store`` over the single postings table — see
-    that docstring for the crash states and repairs."""
-    storefs.repair_store(path, ("postings",))
+    """Finish or roll back a half-swapped postings table."""
+    postings_store.repair(SPEC, path)
 
 
 def repair_replayed_append(spark: SparkSession, path: str) -> None:
-    """Repair the ingest stream's watermark crash window (replayed
-    wave): a dropDuplicates rewrite of postings by the composite
-    (term, doc_id) key through the crash-safe swap, preserving the
-    bucket partitioning — replayed rows are byte-identical per key
-    (sorted positions, deterministic kernel), so keeping any one is
-    exact. Probe ≡ never-crashed twin pytest-pinned."""
-    storefs.repair_replayed_append(
-        spark, path, "postings", ["term", "doc_id"], partition_by=("bucket",)
-    )
+    """Drop the postings a watermark-window replay duplicated."""
+    postings_store.repair_replayed_append(SPEC, spark, path)
 
 
 def compact_phrase_store(spark: SparkSession, path: str) -> None:
-    """Post-ingest maintenance: rewrite postings into one file per
-    bucket partition, then SWAP through the shared crash-safe protocol
-    (repair-on-entry, overwrite-mode tmp build, recovery-ordered
-    swap). Probe ≡ pre-compact pytest-pinned. Rename filesystems only
-    (fail-loud)."""
-    storefs.require_rename_fs(path, "compact_phrase_store")
-    repair_phrase_store(path)
-    postings = spark.read.parquet(f"{path}/postings").repartition(
-        _write_tasks(spark), "bucket"
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/postings_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("postings",))
+    """Rewrite postings into one file per bucket and swap them in."""
+    postings_store.compact(SPEC, spark, path)
 
 
 def phrase_store_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -393,204 +267,63 @@ def phrase_store_stats(spark: SparkSession, path: str) -> DataFrame:
     ``repair_replayed_append``); ``max_term_postings`` is the
     probe-cost signal (the ceiling a worst-case single-word phrase
     probe materializes)."""
-    p = spark.read.parquet(f"{path}/postings")
-    per_term = p.groupBy("term").agg(F.count("*").alias("n"))
-    agg = p.agg(
-        F.count("*").cast("bigint").alias("n_posting_rows"),
+    return postings_store.health(
+        spark,
+        path,
         F.count_distinct("doc_id").cast("bigint").alias("n_docs"),
-        (F.count("*") - F.count_distinct("term", "doc_id"))
-        .cast("bigint")
-        .alias("n_dup_postings"),
         F.coalesce(F.sum(F.size("positions")), F.lit(0))
         .cast("bigint")
         .alias("total_positions"),
-    )
-    ta = per_term.agg(
-        F.count("*").cast("bigint").alias("n_terms"),
-        F.coalesce(F.max("n"), F.lit(0))
-        .cast("bigint")
-        .alias("max_term_postings"),
-    )
-    return agg.crossJoin(F.broadcast(ta)).select(
+    ).select(
         "n_posting_rows", "n_docs", "n_terms", "max_term_postings",
         "total_positions", "n_dup_postings",
     )
 
 
-# ------------------------------------------------ takedown ----------
+# ------------------------------------------------------- takedown ----
 
 
-def delete_from_phrase_store(
-    spark: SparkSession, doc_ids, path: str
-) -> None:
-    """TAKEDOWN — remove documents from the positional index so no
-    future phrase probe can retrieve them. Positions are uncapped
-    per-doc facts (the bm25-postings class), so delete ≡ rebuild-
-    without-victims is a plain filter per touched bucket — staged
-    DURABLY via the ``storefs`` staged-partition protocol before any
-    live bucket directory is cleared (kept rows have no other durable
-    source), with loner buckets correctly emptied (directory cleared
-    through the empty-marker mechanism). Every crash window resumes to
-    completion from the durable ``_delete_intent``
-    (``resume_pending_delete``). Cost: one pushdown scan of the
-    victims' postings for routing + a rewrite of only the touched
-    bucket directories — exactly ``bm25_store._run_recorded_delete``'s
-    shape minus the doclens/stats tail (this store has neither)."""
-    import os
-
-    storefs.require_rename_fs(path, "delete_from_phrase_store")
-    repair_phrase_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in doc_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
+def delete_from_phrase_store(spark: SparkSession, doc_ids, path: str) -> None:
+    """TAKEDOWN: afterwards the index ≡ ``write_phrase_store`` over the
+    corpus without the victims, loner buckets emptied; every crash
+    window resumes from the durable intent (``postings_store``)."""
+    ids = postings_store.record_delete(SPEC, spark, doc_ids, path)
+    if ids:
+        # through the module name, so a patched _run_recorded_delete
+        # can crash a takedown after its intent landed
+        _run_recorded_delete(spark, ids, path)
 
 
 def resume_pending_delete(spark: SparkSession, path: str) -> bool:
-    """Finish a takedown a crash interrupted (idempotent at every
-    crash point — the store-family contract). Repairs any half-swapped
-    postings table first, then re-runs the recorded delete, whose own
-    first step consumes any committed staging. Returns True if there
-    was one to finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_phrase_store(path)
-    ids = sorted(int(r.doc_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
-
-
-def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    """The recorded-delete state machine, re-runnable from the durable
-    ``_delete_intent`` at every crash point — the bm25 postings
-    protocol verbatim: finish any committed staging first (after which
-    the live table holds no half-cleared buckets), route the victims'
-    touched buckets from the live table, stage the kept rows durably,
-    swap, drop the intent."""
-    import shutil
-
-    base = storefs.strip_file_scheme(path)
-    storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    postings = spark.read.parquet(f"{path}/postings")
-    buckets = sorted(
-        int(r["bucket"])
-        for r in postings.where(F.col("doc_id").isin(ids))
-        .select("bucket")
-        .distinct()
-        .collect()
-    )
-    if buckets:
-        kept = (
-            postings.where(F.col("bucket").isin(buckets))
-            .where(~F.col("doc_id").isin(ids))
-            .select("term", "doc_id", "positions", "bucket")
-        )
-        storefs.stage_partition_delete(
-            spark, path, "postings", "bucket", buckets, kept,
-            write_tasks=_write_tasks(spark),
-        )
-        storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
+    """Finish a takedown a crash interrupted; True if one was pending."""
+    return postings_store.resume_pending_delete(SPEC, spark, path)
 
 
 # ------------------------------------------- self-contained library --
 
-#: one phrase-store scratch dir per (session, corpus) — the
-#: bm25_store cache pattern (lock + post-build setdefault,
-#: stale-session eviction, atexit sweep); memoizes the FULLY-BUILT
-#: store (write existing + append arriving): the append is part of
-#: the op under test, and a repeat call must probe, not re-append.
+#: one scratch store per (session, corpus) for each library row; the
+#: corpus store memoizes the FULLY-BUILT store (write existing + append
+#: arriving), so a repeat call probes, not re-appends
 _PHRASE_STORES = storefs.ScratchStoreCache("trisk_phrase_store_")
+_PHRASE_TAKEDOWN_STORES = storefs.ScratchStoreCache("trisk_phrase_takedown_")
 
-
-def corpus_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized scratch index: WRITTEN over the
-    corpus's existing slice (doc_id % MOD != 0), then the arriving
-    slice APPENDED — built once per (session, corpus); repeat calls
-    probe the artifacts (the store economics)."""
-
-    def build(path: str) -> None:
-        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-        existing = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(PHRASE_ARRIVING_MOD)) != 0
-        )
-        arriving = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(PHRASE_ARRIVING_MOD)) == 0
-        )
-        write_phrase_store(spark, existing, path)
-        append_phrase_store(spark, arriving, path)
-
-    return _PHRASE_STORES.get_or_build(spark, sf_dir, build)
+corpus_store_path = partial(postings_store.corpus_store_path, SPEC, _PHRASE_STORES)
+takedown_store_path = partial(
+    postings_store.takedown_store_path, SPEC, _PHRASE_TAKEDOWN_STORES
+)
 
 
 PHRASE_INCREMENTAL_SQL = PHRASE_SEARCH_SQL
 
-#: deterministic victim slice for the self-contained takedown row
-#: (the dedup/semantic takedown convention): EXISTING docs with
-#: doc_id % TAKEDOWN_VICTIM_MOD == 1 get deleted
-TAKEDOWN_VICTIM_MOD = 17
 
-
-def _phrase_takedown_sql() -> str:
-    m, v = PHRASE_ARRIVING_MOD, TAKEDOWN_VICTIM_MOD
-    return _phrase_search_sql(
-        # the store after write(existing) + delete(victims): scanned
-        # docs = existing slice minus the victim slice (victims ⊆
-        # existing, so the plain conjunction is exact); probes stay
-        # derived from the FULL corpus (the probe set is independent
-        # of the store's contents)
-        f" AND ((b.doc_id % {m}) + {m}) % {m} <> 0"
-        f" AND ((b.doc_id % {v}) + {v}) % {v} <> 1"
-    )
-
-
-PHRASE_TAKEDOWN_SQL = _phrase_takedown_sql()
-
-_PHRASE_TAKEDOWN_STORES = storefs.ScratchStoreCache(
-    "trisk_phrase_takedown_"
+#: the store after write(existing) + delete(victims): scanned docs =
+#: existing slice minus the victim slice (victims ⊆ existing, so the
+#: plain conjunction is exact); probes stay derived from the FULL
+#: corpus (the probe set is independent of the store's contents)
+PHRASE_TAKEDOWN_SQL = _phrase_search_sql(
+    f" AND ((b.doc_id % {PHRASE_ARRIVING_MOD}) + {PHRASE_ARRIVING_MOD})"
+    f" % {PHRASE_ARRIVING_MOD} <> 0" + storefs.victims_excluded_sql("b.doc_id")
 )
-
-
-def takedown_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized POST-TAKEDOWN scratch index: built
-    over the existing slice, then ``delete_from_phrase_store`` removes
-    the deterministic victim slice through the real intent-logged
-    staged-partition path — its OWN cache, never the
-    ``corpus_store_path`` store ``phrase_incremental`` shares
-    (mutating a shared artifact would corrupt its memoized probe)."""
-
-    def build(path: str) -> None:
-        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-        existing = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(PHRASE_ARRIVING_MOD)) != 0
-        )
-        victims = sorted(
-            int(r.doc_id)
-            for r in existing.where(
-                F.pmod(F.col("doc_id"), F.lit(TAKEDOWN_VICTIM_MOD)) == 1
-            ).select("doc_id").collect()
-        )  # id-sized (the takedown driver-literal class)
-        write_phrase_store(spark, existing, path)
-        delete_from_phrase_store(spark, victims, path)
-
-    return _PHRASE_TAKEDOWN_STORES.get_or_build(spark, sf_dir, build)
 
 
 def phrase_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,9 +2,10 @@
 ``band_store`` protocol behind the dedup and semantic stores, and the
 bm25, phrase, ivf and gram stores): the fail-loud filesystem gate,
 the atomic ingest watermark, the staged bucket-fan record, the
-crash-safe compaction swap/repair protocol, and the replayed-append
-repair rewrite — ONE implementation of the swap state machine, table
-names parameterized.
+crash-safe compaction swap/repair protocol, the replayed-append
+repair rewrite, the takedown intent every id-keyed store deletes
+through, and the corpus split of the stores' registered rows — ONE
+implementation of each state machine, table names parameterized.
 
 DURABILITY MODEL (single-maintainer, local/HDFS-rename filesystems):
 maintenance that swaps directories and the ingest watermark rely on
@@ -23,6 +24,25 @@ import atexit
 import os
 import shutil
 import threading
+
+from pyspark.sql import functions as F
+
+from trisk_spark import catalog
+
+#: deterministic corpus split of the stores' self-contained registered
+#: rows: id % ARRIVING_MOD == 0 arrives, the rest is the existing
+#: corpus; existing ids with id % VICTIM_MOD == 1 are the takedown
+#: victims
+ARRIVING_MOD = 5
+VICTIM_MOD = 17
+
+#: fail-loud ceiling on a single takedown batch: the id set is a
+#: driver-held literal (an ``isin`` list and a routing collect)
+MAX_DELETE_IDS = 100_000
+
+#: the durable takedown intent beside an id-keyed store: the victim id
+#: list, committed by rename before any live data changes
+DELETE_INTENT = "_delete_intent"
 
 
 def require_rename_fs(path: str, op: str) -> None:
@@ -293,6 +313,95 @@ def complete_staged_partition_swap(path: str, table: str, part_col: str) -> None
     shutil.rmtree(staged_root, ignore_errors=True)
 
 
+def staged_partition_delete(
+    spark,
+    path: str,
+    table: str,
+    part_col: str,
+    id_col: str,
+    ids: list,
+    write_tasks: int | None = None,
+) -> None:
+    """Remove the rows of ``ids`` from a partitioned table whose kept
+    rows have no other durable source. Re-runnable at every crash
+    point: any committed staging is consumed first (after which no
+    live partition is half-cleared), the touched partitions are routed
+    from the live table, their kept rows staged durably
+    (``stage_partition_delete``), then swapped in."""
+    complete_staged_partition_swap(path, table, part_col)
+    live = spark.read.parquet(f"{path}/{table}")
+    parts = sorted(
+        r[0]
+        for r in live.where(F.col(id_col).isin(ids))
+        .select(part_col)
+        .distinct()
+        .collect()
+    )
+    if parts:
+        kept = live.where(F.col(part_col).isin(parts)).where(
+            ~F.col(id_col).isin(ids)
+        )
+        stage_partition_delete(
+            spark, path, table, part_col, parts, kept, write_tasks
+        )
+        complete_staged_partition_swap(path, table, part_col)
+
+
+def record_takedown(
+    spark, path: str, ids, id_col: str, op: str, repair, run
+) -> list[int]:
+    """Validate a takedown batch and land its durable intent: repair
+    any half-swapped table (``repair(path)``), finish an earlier
+    pending takedown (``run(spark, ids, path)``), then commit the id
+    list by tmp write + rename. Returns the sorted ids; empty when
+    there is nothing to delete (no intent is written)."""
+    require_rename_fs(path, op)
+    repair(path)
+    resume_takedown(spark, path, repair, run)
+    ids = sorted({int(i) for i in ids})
+    if len(ids) > MAX_DELETE_IDS:
+        raise ValueError(
+            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
+            "split it; the id set is a driver-held literal by design"
+        )
+    if ids:
+        intent = f"{strip_file_scheme(path)}/{DELETE_INTENT}"
+        catalog.local_rows(spark, [(i,) for i in ids], f"{id_col} bigint").write.mode(
+            "overwrite"
+        ).parquet(intent + "_tmp")
+        os.rename(intent + "_tmp", intent)
+    return ids
+
+
+def pending_takedown_ids(spark, path: str) -> list[int] | None:
+    """The pending takedown's sorted victim ids, or None when no
+    takedown is in flight (one os.path.exists, no job)."""
+    intent = f"{strip_file_scheme(path)}/{DELETE_INTENT}"
+    if not os.path.exists(intent):
+        return None
+    return sorted(int(r[0]) for r in spark.read.parquet(intent).collect())
+
+
+def resume_takedown(spark, path: str, repair, run) -> bool:
+    """Finish a takedown a crash interrupted: repair half-swapped
+    tables first (a crash inside a swap leaves a live table renamed
+    away), then re-run the recorded delete. True if one was
+    pending."""
+    ids = pending_takedown_ids(spark, path)
+    if ids is None:
+        return False
+    repair(path)
+    run(spark, ids, path)
+    return True
+
+
+def clear_takedown(path: str) -> None:
+    """Drop the intent: the recorded delete's last step."""
+    shutil.rmtree(
+        f"{strip_file_scheme(path)}/{DELETE_INTENT}", ignore_errors=True
+    )
+
+
 def swap_in_compacted(path: str, tables: tuple[str, ...]) -> None:
     """Swap each table's freshly-built ``<t>_compact_tmp`` directory in
     as the live ``<t>`` — the recovery-ordered rename sequence whose
@@ -304,6 +413,58 @@ def swap_in_compacted(path: str, tables: tuple[str, ...]) -> None:
         os.rename(f"{base}/{t}", old)
         os.rename(f"{base}/{t}_compact_tmp", f"{base}/{t}")
         shutil.rmtree(old)
+
+
+def corpus_split(spark, sf_dir: str, corpus="documents", id_col="doc_id"):
+    """The deterministic (existing, arriving) split of a corpus table,
+    both from one read."""
+    src = catalog.table(spark, sf_dir, corpus).where(F.col(id_col).isNotNull())
+    on = F.pmod(F.col(id_col), F.lit(ARRIVING_MOD)) == 0
+    return src.where(~on), src.where(on)
+
+
+def takedown_scratch_store(
+    cache, spark, sf_dir: str, write, delete, corpus="documents", id_col="doc_id"
+) -> str:
+    """The session-memoized scratch store of a takedown row: ``write``
+    over the corpus's existing slice, then the victim slice (id %
+    VICTIM_MOD == 1, id-sized: a driver literal) removed through the
+    store's real ``delete`` — its own cache, never the shared corpus
+    store other rows probe."""
+
+    def build(path: str) -> None:
+        existing, _ = corpus_split(spark, sf_dir, corpus, id_col)
+        victims = sorted(
+            int(r[0])
+            for r in existing.where(F.pmod(F.col(id_col), F.lit(VICTIM_MOD)) == 1)
+            .select(id_col)
+            .collect()
+        )
+        write(spark, existing, path)
+        delete(spark, victims, path)
+
+    return cache.get_or_build(spark, sf_dir, build)
+
+
+def victims_excluded_sql(id_col: str) -> str:
+    """The oracle predicate that drops the takedown victim slice."""
+    m = VICTIM_MOD
+    return f" AND (({id_col} % {m}) + {m}) % {m} <> 1"
+
+
+def foreach_batch(stream, body):
+    """foreachBatch with the micro-batch persisted for the call: a
+    store verb consumes the batch more than once (routing or measure,
+    then the write), and the sink materializes inside the call."""
+
+    def fb(batch_df, batch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            body(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return stream.writeStream.outputMode("append").foreachBatch(fb)
 
 
 class ScratchStoreCache:
@@ -381,23 +542,22 @@ class ScratchStoreCache:
 
 def require_no_pending_delete(path: str, op: str, store_label: str) -> None:
     """ADMISSION-SIDE TAKEDOWN GUARD for stores whose delete uses the
-    staged-partition protocol (bm25 postings, phrase postings): a
-    pending ``_delete_intent`` means a crashed takedown whose staging
-    may already be COMMITTED, and an append into a staged bucket would
-    be silently lost when ``complete_staged_partition_swap`` clears
-    the live directory and renames the stale staging in. Fail loud;
-    finish the takedown (that store's ``resume_pending_delete``)
-    first. ONE implementation (r17 review: the bm25 and phrase copies
-    differed only in the store name). Band stores deliberately do not
-    call this at verb level: their deletes re-derive touched buckets
-    from the row tables at resume time, so a post-append resume keeps
-    appended rows — no staged-swap loss window; the composed admission
-    guard covers their semantic hazard. Cost when no takedown is in
-    flight: one os.path.exists, no jobs."""
-    if os.path.exists(f"{strip_file_scheme(path)}/_delete_intent"):
+    staged-partition protocol (bm25 and phrase postings, the IVF
+    index): a pending takedown intent means a crashed takedown whose
+    staging may already be COMMITTED, and an append into a staged
+    partition would be silently lost when
+    ``complete_staged_partition_swap`` clears the live directory and
+    renames the stale staging in. Fail loud; finish the takedown (that
+    store's ``resume_pending_delete``) first. Band stores deliberately
+    do not call this at verb level: their deletes re-derive touched
+    buckets from the row tables at resume time, so a post-append
+    resume keeps appended rows — no staged-swap loss window; the
+    composed admission guard covers their semantic hazard. Cost when
+    no takedown is in flight: one os.path.exists, no jobs."""
+    if os.path.exists(f"{strip_file_scheme(path)}/{DELETE_INTENT}"):
         raise RuntimeError(
-            f"{op}: a pending takedown _delete_intent exists beside "
+            f"{op}: a pending takedown {DELETE_INTENT} exists beside "
             f"the {store_label} store ({path}) — finish it first "
             "(resume_pending_delete), then admit this wave; an append "
-            "into a staged-delete bucket would be lost at the swap"
+            "into a staged-delete partition would be lost at the swap"
         )
